@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI demo of the flagship pipeline: synthesized NMEA → decode → filter →
   * enrich → dashboard join (SparkEntry.entry). `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
     val details = SparkEntry.entry(spark)
     details.show(20, truncate = false)

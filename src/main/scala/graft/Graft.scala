@@ -11,17 +11,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Build a session preconfigured for the engine (local dev shape; on a
-    * cluster spark-submit supplies master/extensions). */
+  /** The engine session ([[GraftSession]]) with [[init]] applied. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(master, shufflePartitions)
     init(spark)
     spark
   }

@@ -384,7 +384,7 @@ object Analytics {
     // r17 (guide §3.1): per-bin occupancy grows with scale while the bin
     // count tracks only the time span (sf10: ~318 exploded rows per bin
     // over 60k bins) — the dense-key regime where the AQE SMJ→SHJ
-    // rewrite's per-key hash chains lose 2.5x (r16 ConfAB). Probe the
+    // rewrite's per-key hash chains lose 2.5x (r16 interleaved A/B). Probe the
     // TRUE exploded bin occupancy on the cached session table and pin
     // merge past the bar; the probe's broadcast gates leave small scales
     // (which broadcast) alone.

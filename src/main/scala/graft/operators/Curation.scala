@@ -519,29 +519,19 @@ object Curation {
     // pass runs twice (the dedup_recall_report pattern)
     val exact = Similarity.annBruteForce(queries, e, k)
       .select(col("q_id"), col("vec_id")).cache()
-    // r17: the pq_adc and ivf_pq legs train IDENTICAL (16, 4, 64)
-    // codebooks — one cached reconstruction can serve both instead of
-    // running the explode→argmin→reassemble pipeline twice. Conf-gated so
-    // the sharing is adjudicable interleaved in one JVM (ConfAB; the
-    // sequential-process wall numbers are untrustworthy on this host).
-    val share = e0.sparkSession.conf
-      .getOption("spark.graft.ann.shareRecon").forall(_ == "true")
-    val recon =
-      if (share) pqReconstruct(e, 16, 4, 64).cache()
-      else null
+    // the pq_adc and ivf_pq legs train identical codebooks (the shipped
+    // entries' PQ triple), so one cached reconstruction serves both instead
+    // of running the explode→argmin→reassemble pipeline twice (r17)
+    val recon = pqReconstruct(e, m = 16, subDim = 4, codebookK = 64).cache()
     val cNorm = Similarity.withNorm(e)
     val methods: Seq[(String, DataFrame)] = Seq(
       // ivf legs mirror the SHIPPED catalog entries, √n sizing law included
       "ivf_cells" -> Similarity.annIvfSqrt(queries, e, nProbe = 3, k = k),
-      "ivf_pq" -> (if (share) {
-        ivfPqCents(cNorm, Similarity.coarseCentroidsSqrt(cNorm),
-          recon, nProbe = 3, k = k)
-      } else ivfPqSqrt(e, nProbe = 3, m = 16, subDim = 4,
-        codebookK = 64, k = k)),
+      "ivf_pq" -> ivfPqCents(cNorm, Similarity.coarseCentroidsSqrt(cNorm),
+        recon, nProbe = 3, k = k),
       "lsh_bucketed" -> Similarity.annLsh(queries, e, numPlanes = 6, k = k,
         dim = 64),
-      "pq_adc" -> (if (share) pqAdcFromRecon(e, recon, k)
-        else pqAdc(e, m = 16, subDim = 4, codebookK = 64, k = k)),
+      "pq_adc" -> pqAdcFromRecon(e, recon, k),
       "truncated_rerank" -> Similarity.annTruncatedRerank(queries, e,
         prefixDim = 16, candK = 100, k = k))
     val reported = methods.map { case (nm, df) =>

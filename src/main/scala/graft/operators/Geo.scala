@@ -371,8 +371,7 @@ object Geo {
     (s, dir) => encounterEpisodes(positions(s, dir)))
 
   /** The episode pipeline on an arbitrary positions frame
-    * (ship/event_id/ts_us/lat/lon) — shared by the catalog entry and the
-    * density-crossover probe ([[graft.DensityProbe]]). */
+    * (ship/event_id/ts_us/lat/lon). */
   private[graft] def encounterEpisodes(p: DataFrame): DataFrame = {
     val repW = Window.partitionBy(col("ship"),
         floor(col("ts_us") / encounterUs).cast("long"))
@@ -381,21 +380,13 @@ object Geo {
       .withColumn("rn", row_number().over(repW))
       .filter(col("rn") === 1)
       .select(col("ship"), col("ts_us"), col("lat"), col("lon"))
-    val det0 = closePairs(reps)
+    val det = closePairs(reps)
       .select(col("ship_a"), col("ship_b"),
         floor(least(col("ts_a"), col("ts_b")) / encounterUs).cast("long").as("dhb"),
         col("d"))
-    // dev A/B lever (VERDICT r16 #5): repartitioning the raw detections by
-    // (ship_a, ship_b) BEFORE the bins aggregate lets the agg, both windows
-    // and the final rollup share ONE exchange (subset clustering satisfies
-    // all of them) — but that one exchange carries FULL detection rows,
-    // where the default shape's two exchanges carry partially-aggregated
-    // bins. Defaults to the shipped shape; the flag exists so the r16
-    // shape-based rejection is MEASURED (see OPTIMIZATION_r17.md).
-    val det = if (det0.sparkSession.conf.getOption(
-        "spark.graft.geo.episodes.repartitionPairs").contains("true")) {
-      det0.repartition(col("ship_a"), col("ship_b"))
-    } else det0
+    // bins aggregate BEFORE the pair exchange: repartitioning the raw
+    // detections by pair first would share one exchange downstream but ship
+    // full detection rows (A/B'd flat at sf1/sf10, BENCH_NOTES r17)
     val bins = det.groupBy(col("ship_a"), col("ship_b"), col("dhb"))
       .agg(count(lit(1)).as("nc"), min(col("d")).as("mk"))
     val pw = Window.partitionBy(col("ship_a"), col("ship_b")).orderBy(col("dhb"))
@@ -412,8 +403,7 @@ object Geo {
         min(col("mk")).as("min_km"))
   }
 
-  /** The exact-twin aggregation on an arbitrary positions frame — the
-    * probe's other arm. */
+  /** The exact-twin aggregation on an arbitrary positions frame. */
   private[graft] def encounterPairs(p: DataFrame): DataFrame =
     closePairs(p)
       .groupBy(col("ship_a"), col("ship_b"))

@@ -65,9 +65,9 @@ case class DeferredExec(
     }
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution
-    // dev-only plan evidence (r17): a Deferred-wrapped query's ExplainDump
+    // dev-only plan evidence (r17): a Deferred-wrapped query's explain
     // output is an 8-line stub — the real plan lives HERE, in the built
-    // DataFrame. When the debug conf is set (ExplainDump --exec sets it),
+    // DataFrame. When the debug conf is set (`Dev explain --exec` sets it),
     // execute the inner QueryExecution and dump its FINAL adaptive plan
     // alongside the stub. Unset (bench/verify), this is a no-op.
     df.sparkSession.conf.getOption("spark.graft.debug.deferredPlanDir")

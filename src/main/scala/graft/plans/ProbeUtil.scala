@@ -68,7 +68,7 @@ private[graft] object ProbeUtil {
     * sort-MERGE path instead of letting AQE's SMJ→SHJ rewrite
     * (`maxShuffledHashJoinLocalMapThreshold`) convert it?
     *
-    * The r16 sf10 ConfAB found the rewrite's one pathology is KEY
+    * The r16 sf10 interleaved A/B found the rewrite's one pathology is KEY
     * CARDINALITY, not size: ~720 semantic hour-bins give the hash relation
     * huge per-key chains whose pointer-chasing loses 1.6-2.5x to the merge
     * path's sequential runs (session_overlap_join 17.1→43.4 s,

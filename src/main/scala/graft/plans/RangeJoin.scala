@@ -46,7 +46,7 @@ import org.apache.spark.sql.types._
   * bin's whole candidate product lands in ONE shuffle task and the stage
   * time degenerates to the hot task (measured on a planted 15%-hot-bin
   * corpus: 262.3 s unsalted vs 89.2 s salted at S=8 — 2.9x, hot task cut
-  * 3.0x, identical output; see SaltProbe + BENCH_NOTES r14). Since r15 the
+  * 3.0x, identical output; BENCH_NOTES r14). Since r15 the
   * rule fires that lever ITSELF: at rewrite time it runs one cheap per-bin
   * candidate-mass aggregate over the two children (a 1-column scan each,
   * Bernoulli-sampled past `spark.graft.autoSalt.probe.targetRows` rows and
@@ -268,18 +268,12 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
       // clamp(share x parallelism x 2, 2, 64) beats the fixed r14 knee at
       // BOTH planted fracs — share 0.15: 66.7 s (S=10) vs 88.0 s (S=8);
       // share 0.81: 431.9 s (S=53) vs 1050.9 s (S=8, task_max = the whole
-      // stage at 1049 s) — so adaptive is the DEFAULT. An explicitly set
-      // `factor` pins S (factor<=1 disables); an explicit
-      // `factorAuto=true` forces adaptive even when factor is also set.
-      val autoConf = conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.factorAuto", "")
-      val factorConf = conf.getConfString(
-        "spark.graft.rangeJoin.autoSalt.factor", "")
-      val s =
-        if (autoConf == "true") ProbeUtil.adaptiveFactor(st.share)
-        else if (factorConf.nonEmpty) factorConf.toInt
-        else if (autoConf == "false") 8
-        else ProbeUtil.adaptiveFactor(st.share)
+      // stage at 1049 s) — so adaptive is the default. An explicitly set
+      // `factor` pins S (factor<=1 disables).
+      val s = conf.getConfString("spark.graft.rangeJoin.autoSalt.factor", "") match {
+        case "" => ProbeUtil.adaptiveFactor(st.share)
+        case f => f.toInt
+      }
       if (st.share < hotMin || st.share * st.nbins < ratioMin || s <= 1) None
       else {
         // Semi/Anti need the left physically unique -> per-row salt on
@@ -462,8 +456,8 @@ object BlockRangeJoins extends Rule[LogicalPlan] with PredicateHelper {
                     EqualTo(ps.toAttribute, saltAttr))), hint))
             case (Some(SaltChoice(s, false)), _) =>
               // Inner only: per-row salt on the exploding right (2x total),
-              // all-S explode on the single-bin left (S x) — the SaltProbe
-              // arrangement, cheaper when the right side is the bigger one
+              // all-S explode on the single-bin left (S x) — the measured
+              // r14 arrangement, cheaper when the right side is the bigger one
               val ps = Alias(Pmod(
                 new XxHash64(saltHashInput(r.output, rightVar), 42L),
                 Literal(s.toLong)), s"${Marker}_ps")()

@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DateType, DoubleType
   *
   * Like the range rule's bins, the cells are SEMANTIC (1-degree grid), so
   * a port city's cell can hold most of the candidate mass and serialize
-  * the stage in one task. GeoSaltProbe measured the lever on this exact
+  * the stage in one task. BENCH_NOTES r15 measured the lever on this exact
   * key shape: a planted 92-93% hot cell cut 2.4x wall / 2.7-3.3x hot task
   * at sf1/sf10, while on the natural corpus salting LOSES 43% at sf10 —
   * so, as with the range rule, the lever must be trigger-gated, never a
@@ -59,7 +59,7 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DateType, DoubleType
   * explicit `autoSalt.factor` pins it — measured on both rules, BENCH_NOTES
   * r16, and not covered by AQE's partition-level skew splitting, which the
   * range twin's A/B shows never splits a hot semantic KEY). Arrangements mirror
-  * the measured probe: Inner uses GeoSaltProbe's (left explodes all S
+  * the measured probe: Inner uses its arrangement (left explodes all S
   * salts, the cell-exploding right carries one deterministic per-row
   * `pmod(xxhash64(<atomic cols>), S)`); Semi/Anti flip it so the left
   * stays physically unique. A qualifying pair still meets exactly once
@@ -234,18 +234,13 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
         "spark.graft.spatialJoin.autoSalt.hotShareMin", "0.05").toDouble
       val ratioMin = conf.getConfString(
         "spark.graft.spatialJoin.autoSalt.skewRatioMin", "8.0").toDouble
-      // Factor selection mirrors the range rule (adaptive default, explicit
-      // factor pins, factorAuto=true forces adaptive) — the range A/B plus
-      // the sf10 spatial transfer A/B are in BENCH_NOTES r16.
-      val autoConf = conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.factorAuto", "")
-      val factorConf = conf.getConfString(
-        "spark.graft.spatialJoin.autoSalt.factor", "")
-      val factor =
-        if (autoConf == "true") ProbeUtil.adaptiveFactor(s.share)
-        else if (factorConf.nonEmpty) factorConf.toInt
-        else if (autoConf == "false") 8
-        else ProbeUtil.adaptiveFactor(s.share)
+      // Factor selection mirrors the range rule (adaptive default, an
+      // explicit factor pins) — the range A/B plus the sf10 spatial
+      // transfer A/B are in BENCH_NOTES r16.
+      val factor = conf.getConfString("spark.graft.spatialJoin.autoSalt.factor", "") match {
+        case "" => ProbeUtil.adaptiveFactor(s.share)
+        case f => f.toInt
+      }
       if (s.share < hotMin || s.share * s.ncells < ratioMin || factor <= 1)
         None
       else {
@@ -366,7 +361,7 @@ object BlockHaversineJoins extends Rule[LogicalPlan] with PredicateHelper {
                   Project(j.output,
                     Join(leftKeyed, rightExp, jt, Some(And(cond, eqs)), hint))
                 case Some(SpatialChoice(s, false)) =>
-                  // the measured GeoSaltProbe arrangement (Inner only):
+                  // the measured r15 arrangement (Inner only):
                   // single-cell left explodes all S salts, the
                   // cell-exploding right carries one deterministic
                   // per-row salt

@@ -104,15 +104,28 @@ class AutoSaltSpec extends SparkSpec {
     spark.sql(
       """CREATE OR REPLACE TEMP VIEW as_e AS
          SELECT event_id, unix_micros(ts) AS ts_us, event_type FROM events""")
-    val df = spark.sql(
+    val sql =
       """SELECT a.event_id, b.event_id
          FROM (SELECT * FROM as_e WHERE event_type = 'purchase') a
          JOIN (SELECT * FROM as_e WHERE event_type = 'signup') b
-           ON b.ts_us >= a.ts_us - 3600000000 AND b.ts_us <= a.ts_us""")
-    val p = df.queryExecution.executedPlan.toString
+           ON b.ts_us >= a.ts_us - 3600000000 AND b.ts_us <= a.ts_us"""
+    val p = spark.sql(sql).queryExecution.executedPlan.toString
     assert(p.contains("__graft_rbin"), p)
     assert(!p.contains("__graft_rbin_ps"),
       s"uniform corpus must not trip the hot-bin trigger:\n$p")
+    // forced past the trigger, the same natural corpus salts at a factor
+    // that does not divide the bin count and stays pair-identical
+    val want = naivePairs(sql)
+    assert(want.nonEmpty)
+    withConf("spark.graft.rangeJoin.autoSalt.factor" -> "13",
+        "spark.graft.rangeJoin.autoSalt.hotShareMin" -> "0",
+        "spark.graft.rangeJoin.autoSalt.skewRatioMin" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = spark.sql(sql)
+      val forced = df.queryExecution.executedPlan.toString
+      assert(forced.contains("__graft_rbin_ps"), s"forced should salt:\n$forced")
+      assert(pairs(df) == want, "forced factor=13 pair drift")
+    }
   }
 
   test("too-few-bins data never salts even when one bin dominates " +
@@ -164,16 +177,15 @@ class AutoSaltSpec extends SparkSpec {
     }
   }
 
-  test("factorAuto derives S from the probed share and stays " +
-      "count-identical") {
+  test("no factor set: adaptive S from the probed share, count-identical") {
     Graft.init(spark)
     plantedViews()
     val sql = joinSql.format("as_skew", "as_skew")
-    withConf("spark.graft.rangeJoin.autoSalt.factorAuto" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    assert(spark.conf.getOption("spark.graft.rangeJoin.autoSalt.factor").isEmpty)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = spark.sql(sql)
       val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("__graft_rbin_ps"), s"factorAuto should salt:\n$p")
+      assert(p.contains("__graft_rbin_ps"), s"adaptive S should salt:\n$p")
       val saltedN = df.count()
       var binnedN = -1L
       withConf("spark.graft.rangeJoin.autoSalt.enabled" -> "false") {

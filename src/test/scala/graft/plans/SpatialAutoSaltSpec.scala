@@ -54,21 +54,44 @@ class SpatialAutoSaltSpec extends SparkSpec {
       "naive join (factors 4 and 8)") {
     Graft.init(spark)
     views()
-    val sql = joinSql.format("gs_skew", "gs_skew")
-    val want = naive(sql)
-    assert(want.size > 100000, s"hot cluster should self-match: ${want.size}")
-    // broadcast disabled: salting targets the shuffle-join regime
-    for (s <- Seq(4, 8)) {
-      withConf("spark.graft.spatialJoin.autoSalt.factor" -> s.toString,
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val df = spark.sql(sql)
-        val p = df.queryExecution.executedPlan.toString
-        assert(p.contains("__graft_cell_ps"), s"factor=$s should salt:\n$p")
-        assert(!p.contains("BroadcastNestedLoopJoin") &&
-          !p.contains("CartesianProduct"), p)
-        assert(pairs(df) == want, s"factor=$s pair drift")
+    /** Salted pairs == naive pairs at factors 4 and 8; the pair count. */
+    def saltedMatchesNaive(view: String, force: (String, String)*): Int = {
+      val sql = joinSql.format(view, view)
+      val want = naive(sql)
+      assert(want.nonEmpty, view)
+      // broadcast disabled: salting targets the shuffle-join regime
+      for (s <- Seq(4, 8)) {
+        withConf(Seq("spark.graft.spatialJoin.autoSalt.factor" -> s.toString,
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ force: _*) {
+          val df = spark.sql(sql)
+          val p = df.queryExecution.executedPlan.toString
+          assert(p.contains("__graft_cell_ps"), s"$view factor=$s should salt:\n$p")
+          assert(!p.contains("BroadcastNestedLoopJoin") &&
+            !p.contains("CartesianProduct"), p)
+          assert(pairs(df) == want, s"$view factor=$s pair drift")
+        }
       }
+      want.size
     }
+    assert(saltedMatchesNaive("gs_skew") > 100000, "hot cluster should self-match")
+    // sf0.001 event positions, natural and with 5% of rows planted into one
+    // 1-degree cell, forced past the trigger
+    Graft.registerTables(spark, sf("sf0.001"))
+    spark.sql(
+      """CREATE OR REPLACE TEMP VIEW gs_nat AS
+         SELECT event_id AS id, (event_id % 1780) / 10.0 - 89.0 AS lat,
+                (event_id % 3580) / 10.0 - 179.0 AS lon FROM events""")
+    spark.sql(
+      """CREATE OR REPLACE TEMP VIEW gs_plant AS
+         SELECT id, IF(hot, 30.02 + j1 * 0.96, lat) AS lat,
+                IF(hot, 30.02 + j2 * 0.96, lon) AS lon
+         FROM (SELECT *, pmod(xxhash64(id, 'geohot'), 10000) < 500 AS hot,
+                      pmod(xxhash64(id, 2), 1000000) / 1000000.0 AS j1,
+                      pmod(xxhash64(id, 3), 1000000) / 1000000.0 AS j2
+               FROM gs_nat)""")
+    for (v <- Seq("gs_nat", "gs_plant"))
+      saltedMatchesNaive(v, "spark.graft.spatialJoin.autoSalt.hotShareMin" -> "0",
+        "spark.graft.spatialJoin.autoSalt.skewRatioMin" -> "0")
   }
 
   test("uniform cells / conf off / factor 1: blocked but NOT salted") {

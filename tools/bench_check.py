@@ -73,9 +73,9 @@ def check(doc, max_load, isolate_min=None, max_steal=3.0, notes=None,
             f"delivered-bandwidth canary degraded: "
             f"max(canary_ms)={max(canaries)} > {canary_bar} "
             f"(co-tenant memory contention; see HostStat)")
-    # r17 (ADVICE r16): an artifact stamped under session-conf override envs
-    # (SPARK_GRAFT_CONF / non-default SHJ_LOCALMAP / CODEGEN_CACHE) is a dev
-    # A/B run, not a judged measurement — refuse unless explicitly re-admitted
+    # r17 (ADVICE r16): an artifact stamped with SPARK_GRAFT_CONF overlay
+    # entries is a dev A/B run, not a judged measurement — refuse unless
+    # explicitly re-admitted
     overrides = doc.get("conf_overrides")
     if overrides:
         if allow_overrides:
@@ -83,11 +83,16 @@ def check(doc, max_load, isolate_min=None, max_steal=3.0, notes=None,
                 notes.append(f"conf overrides admitted by flag: {overrides}")
         else:
             reasons.append(
-                f"session-conf override envs were set: {overrides} "
+                f"SPARK_GRAFT_CONF overrides were set: {overrides} "
                 f"(dev A/B artifact; --allow-overrides to re-admit)")
     elif overrides is None and notes is not None:
         notes.append("no conf_overrides stamp (pre-r17 artifact) — "
                      "override envs unadjudicated")
+    # ADVICE r17: Bench stamps the effective core count (`cpus`); older
+    # artifacts lack it and pass with a note
+    if doc.get("cpus") is None and notes is not None:
+        notes.append("no cpus stamp (pre-GraftSession artifact) — core "
+                     "count unrecorded")
     steal = doc.get("steal_pct")
     if steal is None:
         if notes is not None:
@@ -193,7 +198,16 @@ def selftest():
         "--allow-overrides must re-admit it"
     assert check(dict(clean, conf_overrides=[]), 1.0) == [], \
         "empty conf_overrides must pass"
-    print("bench_check selftest: 21/21 refusal paths OK")
+    # the core-count stamp: present passes silently, absent passes with a note
+    cpus_notes = []
+    assert check(dict(clean, cpus=8), 1.0, notes=cpus_notes) == [] and \
+        not any("cpus" in n for n in cpus_notes), \
+        "cpus-stamped artifact must pass without a cpus note"
+    no_cpus_notes = []
+    assert check(clean, 1.0, notes=no_cpus_notes) == [] and \
+        any("cpus" in n for n in no_cpus_notes), \
+        "missing cpus stamp passes but must leave a note"
+    print("bench_check selftest: 23/23 refusal paths OK")
 
 
 def main():
@@ -213,8 +227,8 @@ def main():
                          "passes with a note instead of being refused. "
                          "Pass inf to waive." % DEFAULT_MAX_CANARY_MS)
     ap.add_argument("--allow-overrides", action="store_true",
-                    help="re-admit artifacts stamped with session-conf "
-                         "override envs (dev A/B runs)")
+                    help="re-admit artifacts stamped with SPARK_GRAFT_CONF "
+                         "overrides (dev A/B runs)")
     ap.add_argument("--isolate-min", type=float, default=None,
                     help="override the heavy-row bar (inf = waive; default: "
                          "the artifact's own isolate_min, else 10.0)")
@@ -244,7 +258,7 @@ def main():
             for r in reasons:
                 print(f"REFUSED {path}: {r}", file=sys.stderr)
         else:
-            print(f"ok {path}")
+            print(f"ok {path} (cpus={doc.get('cpus', 'unstamped')})")
     return 1 if bad else 0
 
 
