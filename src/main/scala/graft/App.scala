@@ -1,6 +1,6 @@
 package graft
 
-import graft.ais.{AisIngest, Enrich, FixtureWeatherClient, HttpWeatherClient, WeatherClient}
+import graft.ais.{FixtureWeatherClient, HttpWeatherClient, WeatherClient}
 import graft.streaming.AisPipeline
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,11 +17,14 @@ import org.apache.spark.sql.streaming.Trigger
   *             Needs the spark-sql-kafka connector jar on the classpath
   *             (deploy-time; see README "Deploying").
   *
-  * All modes run the same checkpointed decode pipeline. socket/replay land in
-  * parquet append sinks (the MV analog) and weather-enrich the position sink;
-  * weather uses the HTTP client when WEATHER_API_KEY is set (the reference's
-  * WeatherAPI.com dependency, lib/weather.py), else the deterministic
-  * fixture client.
+  * All modes run the same checkpointed decode pipeline. socket/replay run it
+  * as ONE streaming query ([[AisPipeline.start]]): each micro-batch is decoded
+  * once and committed to three parquet tables under `<outDir>` — `info`,
+  * `positions`, then `positions_wx` (weather-enriched positions) — each with
+  * its own file-sink `_spark_metadata` log, committed per batchId, with the
+  * query's checkpoint in `<outDir>/ckpt`. Weather uses the HTTP
+  * client when WEATHER_API_KEY is set (the reference's WeatherAPI.com
+  * dependency, lib/weather.py), else the deterministic fixture client.
   */
 object App {
   private val usage =
@@ -51,6 +54,14 @@ object App {
 
     val (raw, outDir) = args(0) match {
       case "socket" =>
+        // Spark 4.1.2's TextSocketMicroBatchStream reader fetches each row
+        // with ListBuffer.apply(index), O(n^2) per partition. That is why
+        // the source keeps its default partition count: with
+        // option("numPartitions", 1) two-fragment type-5 messages would stay
+        // adjacent (none mis-paired across partitions), but a 24k-row
+        // single-partition batch then took 3.3-6.6 s in its first sink write,
+        // the one that reads the source. Pairing fragments across partitions
+        // needs an array-backed socket source of its own.
         (spark.readStream.format("socket")
           .option("host", args(1)).option("port", args(2).toInt).load(),
           args(3))
@@ -59,26 +70,12 @@ object App {
       case other => sys.error(s"unknown mode $other")
     }
 
-    val qs = AisPipeline.start(raw, s"$outDir/ckpt", s"$outDir/positions",
-      s"$outDir/info",
-      trigger = Trigger.ProcessingTime("5 seconds"))
-
-    // enrichment stage: follow the position sink, publish enriched parquet
     val clientFactory: () => WeatherClient = sys.env.get("WEATHER_API_KEY") match {
       case Some(key) => () => new HttpWeatherClient(key)
       case None      => () => new FixtureWeatherClient
     }
-    import spark.implicits._
-    val posStream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[ais.PositionEvent].schema)
-      .parquet(s"$outDir/positions").as[ais.PositionEvent]
-    val enriched = Enrich.withWeather(posStream, clientFactory)
-    val wq = enriched.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$outDir/positions_wx")
-      .option("checkpointLocation", s"$outDir/ckpt/wx")
-      .trigger(Trigger.ProcessingTime("5 seconds")).start()
-
-    spark.streams.awaitAnyTermination()
-    qs.positions.stop(); qs.info.stop(); wq.stop()
+    AisPipeline.start(raw, s"$outDir/ckpt", s"$outDir/positions", s"$outDir/info",
+      s"$outDir/positions_wx", clientFactory,
+      trigger = Trigger.ProcessingTime("5 seconds")).awaitTermination()
   }
 }

@@ -2,12 +2,14 @@ package graft.streaming
 
 import graft.ais._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
 /** The streaming pipeline (SURVEY.md §3.1-3.2): raw NMEA lines → decode →
-  * router → two append sinks, plus the stateful latest-per-key view and
-  * windowed fleet metrics.
+  * router → the position, ship-info and weather-enriched position tables,
+  * plus the stateful latest-per-key view and windowed fleet metrics.
   *
   * Source binding: any streaming DataFrame with a string `value` column —
   * `spark.readStream.text(dir)` (replay), `format("socket")` (the live feed's
@@ -17,9 +19,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * strictly stronger than the reference's at-most-once commit-then-produce
   * window (consumer:67,88; SURVEY.md §2.B6).
   *
-  * The C3 "materialized views" are the two append sinks themselves: the
+  * The C3 "materialized views" are the append sinks themselves: the
   * ClickHouse Kafka-engine + MV pair (clickhouse-ddl.sql:20-38) collapses to
-  * `writeStream.outputMode("append")` per topic.
+  * one file-sink table per topic.
   */
 object AisPipeline {
 
@@ -30,22 +32,41 @@ object AisPipeline {
     AisIngest.decode(raw.select(col("value").cast("string")).as[String])
   }
 
-  /** Start both branches into parquet append sinks (durable MV analog). */
+  /** The durable pipeline as ONE streaming query: each micro-batch decodes
+    * its lines once, persists the decoded rows, and commits them to three
+    * parquet tables — ship info (`infoPath`), positions (`posPath`), then
+    * weather-enriched positions (`wxPath`) — so an enriched row lands in the
+    * same trigger as its decoded row.
+    *
+    * Each table is a [[FileStreamSink]] with its own `_spark_metadata` log,
+    * exactly what `writeStream.format("parquet")` writes, so
+    * `spark.read.parquet` and [[graft.ais.Dashboard]] read only committed
+    * batches. A sink skips a batchId its log already
+    * holds; after a crash between two sink commits the replayed batch
+    * therefore lands only in the sinks that missed it (exactly-once per
+    * table, from the replayable source + the per-sink batchId log). A plain
+    * `df.write` per batch would drop that log.
+    *
+    * The enriched table commits last: a batch visible there is visible in
+    * `info` (which the dashboard joins it with) and `positions` (which it
+    * derives from), so it never runs ahead of either. `clientFactory` builds
+    * one weather client per partition ([[Enrich.withWeather]]). */
   def start(raw: DataFrame, checkpointRoot: String, posPath: String,
-      infoPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): RunningQueries = {
-    val d = decoded(raw)
-    val pos = AisIngest.positions(d).writeStream
-      .outputMode("append").format("parquet")
-      .option("path", posPath)
-      .option("checkpointLocation", s"$checkpointRoot/positions")
-      .trigger(trigger).start()
-    val info = AisIngest.shipInfo(d).writeStream
-      .outputMode("append").format("parquet")
-      .option("path", infoPath)
-      .option("checkpointLocation", s"$checkpointRoot/info")
-      .trigger(trigger).start()
-    RunningQueries(pos, info)
+      infoPath: String, wxPath: String, clientFactory: () => WeatherClient,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val spark = raw.sparkSession
+    def sink(path: String) =
+      new FileStreamSink(spark, path, new ParquetFileFormat, Nil, Map.empty)
+    val (infoSink, posSink, wxSink) = (sink(infoPath), sink(posPath), sink(wxPath))
+    raw.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val d = decoded(batch).persist()
+      try {
+        val pos = AisIngest.positions(d)
+        infoSink.addBatch(batchId, AisIngest.shipInfo(d).toDF())
+        posSink.addBatch(batchId, pos.toDF())
+        wxSink.addBatch(batchId, Enrich.withWeather(pos, clientFactory).toDF())
+      } finally d.unpersist()
+    }.option("checkpointLocation", checkpointRoot).trigger(trigger).start()
   }
 
   /** Start both branches into in-memory tables (tests/dev — C4's

@@ -139,4 +139,63 @@ class CrashRecoverySpec extends SparkSpec {
     // paragraphs actually deduped across batches (not all docs fully kept)
     assert(clean.values.exists(_ == 0L))
   }
+
+  /** Run the one-query AIS pipeline over [[AisBatches]] feed batches. With
+    * `blocked = Some(table)`, batch [[AisCrashAt]] cannot commit that
+    * table: a directory sits where its `_spark_metadata/<batchId>` log file
+    * goes, so the sink's commit fails after the earlier sinks committed the
+    * batch. The obstruction is removed and the query restarted from its
+    * checkpoint. Returns the three tables. */
+  private def driveAis(blocked: Option[String]): AisFeed.Tables = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ais-crash").toString
+    val in = MemoryStream[String]
+    def start() = AisPipeline.start(in.toDF(), s"$dir/ckpt", s"$dir/pos",
+      s"$dir/info", s"$dir/wx", () => new graft.ais.FixtureWeatherClient,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    def logged(table: String, b: Int) = new java.io.File(s"$dir/$table/_spark_metadata/$b")
+    try {
+      var q = start()
+      var restarted = false
+      (0 until AisBatches).foreach { b =>
+        val block = blocked.filter(_ => b == AisCrashAt).map(logged(_, b))
+        block.foreach(_.mkdirs())
+        in.addData(AisFeed.batch(b))
+        try q.processAllAvailable()
+        catch {
+          case _: StreamingQueryException =>
+            assert(block.nonEmpty && !restarted, "unexpected crash")
+            // the crash fell between sink commits: the sinks before the
+            // blocked one hold batch b, the blocked one does not
+            val order = Seq("info", "pos", "wx")
+            val (done, rest) = order.splitAt(order.indexOf(blocked.get))
+            assert(done.nonEmpty && done.forall(logged(_, b).isFile), done)
+            assert(rest.forall(!logged(_, b).isFile), rest)
+            block.foreach(_.delete())
+            restarted = true
+            q = start() // recover from checkpoint; batch b replays
+            q.processAllAvailable()
+        }
+      }
+      q.stop()
+      assert(blocked.isEmpty || restarted, "injected crash never fired")
+      AisFeed.read(spark, dir)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  private val AisBatches = 4
+  private val AisCrashAt = 2
+
+  test("AIS one-query pipeline: crash between sink commits + restart == uninterrupted run") {
+    val clean = driveAis(blocked = None)
+    assert(clean.pos.nonEmpty && clean.info.nonEmpty && clean.wx.nonEmpty)
+    // no duplicates: every report is one row (mmsi, timestamp are unique in the feed)
+    assert(clean.pos.map(p => (p.mmsi, p.timestamp)).distinct.size == clean.pos.size)
+    assert(clean.info.map(i => (i.mmsi, i.timestamp)).distinct.size == clean.info.size)
+    assert(clean.wx.map(w => (w.mmsi, w.timestamp)).distinct.size == clean.wx.size)
+    // crash after info committed (pos blocked), and after info + pos (wx blocked)
+    for (table <- Seq("pos", "wx"))
+      assert(driveAis(blocked = Some(table)) == clean, table)
+  }
 }

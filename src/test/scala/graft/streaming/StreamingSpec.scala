@@ -5,6 +5,12 @@ import graft.ais._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+/** A weather client whose every lookup fails with an exception. */
+class ThrowingWeatherClient extends WeatherClient {
+  def current(lat: Double, lon: Double): Option[WeatherInfo] =
+    throw new IllegalStateException("weather lookup failed")
+}
+
 class StreamingSpec extends SparkSpec {
   import NmeaEncoder._
 
@@ -157,22 +163,66 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
     val input = MemoryStream[String]
+    def run(): Unit = {
+      val q = AisPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/pos", s"$tmp/info",
+        s"$tmp/wx", () => new FixtureWeatherClient,
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      try q.processAllAvailable() finally q.stop()
+    }
     // AvailableNow snapshots the available offsets at query START — data must
     // be added before start() or the run may (racily) see nothing
-    input.addData(position(1, 257000001L, 0, 12.3, 5.32, 60.39, 187, 1700000000L))
-    val qs1 = AisPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/pos", s"$tmp/info",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    qs1.positions.processAllAvailable(); qs1.info.processAllAvailable()
-    qs1.positions.stop(); qs1.info.stop()
-    // restart from the same checkpoint with one more record
-    input.addData(position(1, 257000005L, 0, 9.9, 5.0, 60.0, 90, 1700000500L))
-    val qs2 = AisPipeline.start(input.toDF(), s"$tmp/ckpt", s"$tmp/pos", s"$tmp/info",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    qs2.positions.processAllAvailable(); qs2.info.processAllAvailable()
-    qs2.positions.stop(); qs2.info.stop()
-    val pos = spark.read.parquet(s"$tmp/pos")
-    assert(pos.count() == 2) // exactly-once into files: no dupes, no loss
-    assert(pos.select(countDistinct(col("mmsi"))).head().getLong(0) == 2)
+    input.addData(AisFeed.batch(0)); input.addData(AisFeed.batch(1))
+    run()
+    // restart from the same checkpoint with more input
+    input.addData(AisFeed.batch(2)); input.addData(AisFeed.batch(3))
+    run()
+    // one query, three tables, each with the file-sink log readers go through
+    for (t <- Seq("pos", "info", "wx"))
+      assert(new java.io.File(s"$tmp/$t/_spark_metadata").isDirectory, t)
+    // exactly-once into files: the batch pipeline over the same NMEA, as a
+    // multiset — no duplicates, no loss
+    val got = AisFeed.read(spark, tmp)
+    assert(got == AisFeed.replayed(spark, (0 to 3).flatMap(AisFeed.batch)))
+    assert(got.pos.nonEmpty && got.info.size == 8 && got.wx.size == got.pos.size)
+  }
+
+  test("one-query pipeline releases each batch's decoded cache, also when a sink write throws") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cache").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val released = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        released.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def start(dir: String, client: () => WeatherClient, input: MemoryStream[String]) =
+      AisPipeline.start(input.toDF(), s"$tmp/$dir/ckpt", s"$tmp/$dir/pos",
+        s"$tmp/$dir/info", s"$tmp/$dir/wx", client,
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try {
+      val input = MemoryStream[String]
+      val q = start("ok", () => new FixtureWeatherClient, input)
+      try (0 until 3).foreach { b =>
+        input.addData(AisFeed.batch(b))
+        q.processAllAvailable()
+        assert(persisted == before, s"after batch $b")
+      } finally q.stop()
+      // every batch persisted its decoded rows and released them
+      val deadline = System.currentTimeMillis() + 10000
+      while (released.get < 3 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(released.get >= 3)
+
+      val failing = MemoryStream[String]
+      val qf = start("failing", () => new ThrowingWeatherClient, failing)
+      try {
+        failing.addData(AisFeed.batch(3))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](qf.processAllAvailable())
+      } finally qf.stop()
+      assert(persisted == before)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("streaming session windows close after the gap and honor the watermark") {
